@@ -46,10 +46,6 @@ fixture, out_root, slots, reps = (sys.argv[1], sys.argv[2],
 # so the single box's shared disk is a measurement artifact here
 local_dir = os.path.join(out_root, "scratch")
 os.makedirs(local_dir, exist_ok=True)
-# 4x task slots for the salted write shuffle: at 2x, hash collisions of
-# (sink,source,sev,salt) keys stack up to ~5.8%/partition (2.8x ideal) and
-# the write stage straggles ~33%; at 4x the simulated makespan is 1.04x
-# ideal and measured e2e improves ~15%
 # split sizing for a ~300 MB fixture: at 100 TB the default 128 MB splits
 # give ample scan parallelism, but a small fixture needs proportionally
 # small splits or the parse stage runs 6-wide while 24 slots idle

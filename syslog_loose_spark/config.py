@@ -114,33 +114,5 @@ class PipelineConfig:
     """Scale/shuffle knobs for the parse → enrich → route → aggregate job."""
 
     parse: ParseConfig = field(default_factory=ParseConfig)
-    #: sources whose key frequency is high enough to skew the routing shuffle;
-    #: rows from these are salted with xxhash64(doc_id) % salt_buckets.
-    #: None = measure instead of configure (route.detect_hot_sources runs
-    #: one cheap key-count pass at job start); () = no salting.
-    hot_sources: tuple[str, ...] | None = ("nginx",)
-    salt_buckets: int = 16
-    #: physical strategy for the routed fan-out write:
-    #:   "rebalance" — AQE REBALANCE hint on the writer partition columns:
-    #:     the optimizer splits skewed shuffle partitions AND coalesces
-    #:     tiny ones at runtime (advisoryPartitionSizeInBytes sized), so
-    #:     hot (sink,source,severity) keys need no hand salting; measured
-    #:     ~2x the salted repartition on the 4M-row fan-out at 24 slots
-    #:     (write-stage util 0.69 -> even task sizes).  Needs AQE on
-    #:     (session.py default).
-    #:   "salted_repartition" — explicit repartition on the partition
-    #:     columns + hot-source salt (hot_sources/salt_buckets); the
-    #:     AQE-off fallback, kept tested.
-    write_strategy: str = "rebalance"
-    #: severity bucket boundaries: 0-3 high, 4-5 mid, 6-7 low, null -> "unknown"
+    #: default bucket count for route_write_bucketed
     shuffle_partitions: int = 32
-    #: parquet dictionary encoding for the fat token-array column in the
-    #: routed sinks.  OFF by default: every concurrently-open writer
-    #: (maxConcurrentOutputFileWriters allows up to 128 per task) holds a
-    #: dictionary builder for the highest-churn column, and the r5 CPU
-    #: audit measured the build as pure overhead on the fan-out write —
-    #: disabling it for tokens alone (strings keep their dictionaries)
-    #: cut task-blocking GC ~25% and machine CPU ~4% at 24 slots for
-    #: ~15-20% larger token pages (snappy still captures template
-    #: repetition).  Flip on where storage cost dominates compute.
-    token_dictionary: bool = False

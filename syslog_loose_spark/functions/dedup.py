@@ -252,23 +252,6 @@ def _coeffs(k: int):
     return a, b
 
 
-def minhash_signature(text: Column, k: int = 8, n: int = 3) -> Column:
-    """k-wide MinHash over word n-gram shingles:
-    sig_i = min over shingles of (a_i * h(s) + b_i) mod 2^31-1."""
-    a, b = _coeffs(k)
-    hashes = F.transform(F.array_distinct(shingles(text, n)), word_hash)
-
-    # NB: plain 2-arg lambdas only — a default-arg capture changes the
-    # detected arity and pyspark binds the array-index column instead.
-    def _mh(ai: int, bi: int):
-        return lambda h: (h * F.lit(ai) + F.lit(bi)) % F.lit(MERSENNE)
-
-    return F.array(*[
-        F.array_min(F.transform(hashes, _mh(a[i], b[i]))).alias(f"mh{i}")
-        for i in range(k)
-    ])
-
-
 def minhash_signature_df(df: DataFrame, k: int = 8, n: int = 3,
                          text_col: str = "text", id_col: str = "doc_id"
                          ) -> DataFrame:

@@ -28,10 +28,6 @@ def token_count(text: Column) -> Column:
     return F.size(words(text))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def stopword_ratio(text: Column, stopwords=EN_STOPWORDS) -> Column:
     w = words(F.lower(text))
     hits = F.size(F.filter(w, lambda x: x.isin(*stopwords)))

@@ -12,9 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-AGG_COLS = ("sink", "facility", "severity", "hour")
-
-
 def sink_aggregates(routed: DataFrame) -> DataFrame:
     return (
         routed

@@ -8,10 +8,10 @@ no-backtracking-within-an-alternative execution, which is what makes one
 regex pass per protocol semantically equal to the combinator sequence.
 
 Exposed as:
-  * ``parse_tokenized(df, cfg)``   — mapInPandas over the tokenized input
+  * ``parse_tokenized(df, cfg)``   — arrow_udf over the tokenized input
     table (detokenize + parse in one Arrow pass; the job's only
     JVM→Python boundary)
-  * ``parse_syslog_udf(cfg)``      — scalar pandas_udf: string -> struct
+  * ``parse_syslog_udf(cfg)``      — scalar arrow_udf: string -> struct
 
 Semantics are verified row-for-row against the independent plain-Python
 oracle (syslog_loose_spark.oracle) in tests/test_parse_vectorized.py,
@@ -22,10 +22,9 @@ from __future__ import annotations
 
 import re
 from datetime import datetime, timedelta, timezone
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from ..config import (
@@ -714,41 +713,6 @@ def parse_lines(lines, raws, cfg: ParseConfig):
     return cols
 
 
-def _cols_to_pdf(cols, extra: Optional[dict] = None) -> pd.DataFrame:
-    data = dict(extra or {})
-    names = ["protocol", "version", "facility", "severity", "ts",
-             "tz_offset_seconds", "hostname", "appname", "procid_pid",
-             "procid_name", "msgid", "structured_data", "msg", "parse_ok"]
-    for name, col in zip(names, cols):
-        if name == "ts":
-            nat = np.iinfo(np.int64).min        # pandas NaT sentinel
-            ints = np.fromiter((nat if v is None else v for v in col),
-                               dtype=np.int64, count=len(col))
-            data[name] = pd.Series(ints.view("M8[us]"))
-        elif name == "structured_data":
-            # tuples map positionally onto the struct fields in Arrow and
-            # convert ~2x faster than per-element dicts
-            data[name] = pd.Series(col, dtype=object)
-        elif name in ("version",):
-            data[name] = pd.Series(col, dtype="object")
-        else:
-            data[name] = pd.Series(col, dtype=object)
-    return pd.DataFrame(data)
-
-
-def detokenize_batch(tokens_col) -> List[str]:
-    """array<int32> of UTF-8 byte values -> str, via one flat numpy buffer
-    per Arrow batch (no per-character Python)."""
-    import pyarrow as pa
-
-    arr = pa.array(tokens_col, type=pa.list_(pa.int32()))
-    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.uint8)
-    offs = arr.offsets.to_numpy(zero_copy_only=False)
-    buf = flat.tobytes()
-    return [buf[offs[j]:offs[j + 1]].decode("utf-8", "replace")
-            for j in range(len(offs) - 1)]
-
-
 _ARROW_STRUCT_TYPE = None
 
 
@@ -774,6 +738,38 @@ def _cols_to_arrow(cols):
     return pa.StructArray.from_arrays(arrays, fields=list(st))
 
 
+def _token_bytes(tokens: pa.ListArray):
+    """The list<int32> tokens as one uint8 buffer indexed by
+    ``tokens.offsets``, plus the rows holding a token outside the byte
+    domain 0-255 or a null token (None when there are none).  Such a
+    token has no byte to stand for, so it is written as 0xFF, which
+    decodes to U+FFFD, and its row becomes a fallback row (_dead_letter)
+    instead of a silently different line."""
+    values = tokens.values
+    if values.null_count:
+        values = values.fill_null(-1)
+    flat = values.to_numpy(zero_copy_only=False)
+    # negative int32 values view as uint32 > 255: one reduction, no copy
+    if not flat.size or flat.view(np.uint32).max() <= 255:
+        return flat.astype(np.uint8), None
+    out = flat.view(np.uint32) > 255
+    seen = np.concatenate(([0], np.cumsum(out)))
+    offs = tokens.offsets.to_numpy(zero_copy_only=False)
+    bad = np.flatnonzero(seen[offs[1:]] != seen[offs[:-1]])
+    return np.where(out, 0xFF, flat).astype(np.uint8), bad
+
+
+def _dead_letter(cols, rows, raws) -> None:
+    """Overwrite ``rows`` of parse_lines' columns with the tolerant
+    fallback row (lib.rs:77-92): all nulls, msg = raw input, parse_ok
+    false, so the router sends them to the dead_letter sink."""
+    for i in rows:
+        for col in cols:
+            col[i] = None
+        cols[0][i], cols[11][i], cols[12][i], cols[13][i] = \
+            "RFC3164", [], raws[i], False
+
+
 def parse_tokens_udf(cfg: ParseConfig = ParseConfig()):
     """Struct-returning *arrow-native* UDF over the tokens column.  Zero
     pandas conversion in either direction: the list<int32> arrives as one
@@ -791,13 +787,15 @@ def parse_tokens_udf(cfg: ParseConfig = ParseConfig()):
     def _parse(tokens: pa.Array) -> pa.Array:
         if isinstance(tokens, pa.ChunkedArray):
             tokens = tokens.combine_chunks()
-        flat = tokens.flatten().to_numpy(zero_copy_only=False) \
-            .astype(np.uint8)
+        flat, bad = _token_bytes(tokens)
         offs = tokens.offsets.to_numpy(zero_copy_only=False)
         buf = flat.tobytes()
         raws = [buf[offs[j]:offs[j + 1]].decode("utf-8", "replace")
                 for j in range(len(offs) - 1)]
-        return _cols_to_arrow(parse_lines(raws, raws, cfg))
+        cols = parse_lines(raws, raws, cfg)
+        if bad is not None:
+            _dead_letter(cols, bad, raws)
+        return _cols_to_arrow(cols)
 
     return _parse
 

@@ -1,9 +1,9 @@
 """Checkpoint/resume state table.
 
 A run is split into ``n_chunks`` deterministic input chunks
-(``pmod(xxhash64(doc_id), n_chunks)`` — the predicate is on a *scan* column,
-so it prunes before the parse stage; with an Iceberg input the chunks align
-with table partitions and prune at the manifest level).  After a chunk's
+(``pmod(xxhash64(doc_id), n_chunks)``).  The predicate filters rows after
+the scan; it does not prune files or row groups, so every chunk reads the
+whole input before its parse stage.  After a chunk's
 routed write commits, its lineage/metrics rows plus a commit marker are
 appended to the state table.  A killed run re-executes only chunks without
 a commit marker; each chunk write is a full overwrite of its own directory

@@ -1,4 +1,4 @@
-"""Routing / fan-out stage with explicit skew salting.
+"""Routing / fan-out stage.
 
 Rows are routed to per-sink targets partitioned by (source,
 severity_bucket); unparseable rows (the *_exact dead-letter semantics,
@@ -9,15 +9,16 @@ Scale reasoning (the part that must survive 1000 executors / 10^12 rows):
 * ONE pass: the writer partitions by (sink, source, severity_bucket) in a
   single action — never one filtered job per sink, which would re-run the
   parse stage per sink.
-* Explicit salting: without clustering, every task writes a file into every
+* Skew: without clustering, every task writes a file into every
   partition directory (tasks × dirs small-file explosion); clustering by
-  raw ``source`` instead would put ~60% of all rows (hot nginx) into one
-  task.  So we repartition by (salted_source, severity_bucket) where hot
-  sources get ``pmod(xxhash64(doc_id), K)`` sub-keys: cold partitions get
-  one writer file, hot partitions exactly K, and no task sees more than
-  ~1/K of the hot source.
-* AQE skew-join/coalesce stays on as a complement (session.py), but the
-  salt is deterministic and does not depend on runtime re-planning.
+  raw ``source`` would put ~60% of all rows (hot nginx) into one task.
+  The AQE REBALANCE hint on the writer's partition columns is the skew
+  handling: at runtime the optimizer splits shuffle partitions above
+  advisoryPartitionSizeInBytes and coalesces tiny ones, so task sizes
+  stay even however skewed the key distribution is.
+* Sink format: zstd, with parquet's dictionary encoding on for every
+  column.  The token values are bytes, so the ``tokens.list.element``
+  dictionary never exceeds 256 entries.
 """
 
 from __future__ import annotations
@@ -28,6 +29,9 @@ from ..config import PipelineConfig
 
 SINK_COL = "sink"
 DEAD_LETTER = "dead_letter"
+#: the routed sinks' parquet codec, set on that write alone: the session
+#: codec stays in force for the aggregates, state and every other write
+SINK_CODEC = "zstd"
 
 
 def with_sink(enriched: DataFrame) -> DataFrame:
@@ -39,97 +43,30 @@ def with_sink(enriched: DataFrame) -> DataFrame:
     )
 
 
-def detect_hot_sources(df: DataFrame, fraction: float = 0.25,
-                       key_col: str = "source") -> tuple:
-    """Find skewed routing keys by measurement instead of configuration:
-    a column-pruned count pass over the key column; any key holding at
-    least ``fraction`` of rows is hot and gets salted.  The threshold
-    filter runs Spark-side BEFORE the collect, so at most 1/fraction rows
-    ever reach the driver — safe even for a high-cardinality key column.
-    At 10^12 rows this is two cheap aggregate jobs, negligible next to
-    the parse, and it replaces a hand-maintained list that silently goes
-    stale when traffic shifts."""
-    total = df.count() or 1
-    hot = (df.groupBy(key_col).agg(F.count(F.lit(1)).alias("n"))
-           .where(F.col("n") >= float(fraction) * total)
-           .select(key_col).collect())
-    return tuple(sorted(r[key_col] for r in hot))
+def clustered_for_write(routed: DataFrame) -> DataFrame:
+    """Cluster rows for the dynamic-partition fan-out write with the AQE
+    REBALANCE hint on the writer partition columns (needs AQE on, the
+    session.py default).  The per-task working set stays at a handful of
+    open files, so (with maxConcurrentOutputFileWriters, session.py) the
+    writer skips its implicit whole-row sort, which dominates fan-out
+    cost for fat token rows."""
+    return routed.hint("rebalance", SINK_COL, "source", "severity_bucket")
 
 
-def _is_hot(cfg: PipelineConfig):
-    if cfg.hot_sources is None:
-        # None means 'auto-measure' (config.py): run_pipeline resolves it
-        # via detect_hot_sources before routing.  Reaching this point with
-        # None (e.g. calling route_write / salted_source directly, or a
-        # streaming foreachBatch built from an unresolved config) would
-        # silently DISABLE skew protection — fail loudly instead.
-        raise ValueError(
-            "hot_sources is None ('auto') but detection has not run; call "
-            "detect_hot_sources(df) and pass the result (or an explicit "
-            "tuple — () disables salting deliberately)")
-    if not cfg.hot_sources:
-        return F.lit(False)
-    return F.col("source").isin(*cfg.hot_sources)
-
-
-def salted_source(cfg: PipelineConfig):
-    """Deterministic hot-source salt: source '#' xxhash64(doc_id) % K."""
-    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(cfg.salt_buckets))
-    return F.when(
-        _is_hot(cfg),
-        F.concat_ws("#", F.col("source"), salt.cast("string"))
-    ).otherwise(F.col("source"))
-
-
-def clustered_for_write(routed: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Cluster rows for the dynamic-partition fan-out write.
-
-    Default ("rebalance"): the AQE REBALANCE hint on the writer partition
-    columns — at runtime the optimizer splits shuffle partitions that
-    exceed advisoryPartitionSizeInBytes and coalesces tiny ones, so task
-    sizes stay even no matter how skewed the (sink, source, severity) key
-    distribution is.  This is the Catalyst-native generalization of hot
-    key salting: the r3 event-log audit showed the salted write stage at
-    util 0.69 (p50 task 0.7 s vs max 3.3 s — keys below the hot-source
-    threshold still skew); REBALANCE measured ~2x on the same fan-out.
-
-    Fallback ("salted_repartition"): explicit repartition on exactly the
-    writer's partition columns plus the hot-source salt, so a task holds
-    one (or 1/K of one) output directory.  Either way the per-task
-    working set stays at a handful of open files and (with
-    maxConcurrentOutputFileWriters, session.py) the writer skips its
-    implicit whole-row sort, which dominates fan-out cost for fat token
-    rows."""
-    if cfg.write_strategy == "rebalance":
-        return routed.hint("rebalance", SINK_COL, "source",
-                           "severity_bucket")
-    salt = F.when(_is_hot(cfg),
-                  F.pmod(F.xxhash64(F.col("doc_id")),
-                         F.lit(cfg.salt_buckets))).otherwise(F.lit(0))
-    return routed.repartition(cfg.shuffle_partitions,
-                              F.col(SINK_COL), F.col("source"),
-                              F.col("severity_bucket"), salt)
-
-
-def route_write(routed: DataFrame, out_dir: str, cfg: PipelineConfig,
+def route_write(routed: DataFrame, out_dir: str,
                 mode: str = "overwrite") -> None:
     """Cluster (see clustered_for_write), then fan out in ONE partitioned
-    write.  Dictionary encoding is disabled for the token column alone by
-    default (cfg.token_dictionary): with up to 128 concurrently-open
-    writers per task, per-writer dictionary builders on the fat
-    high-churn array column are measured GC/CPU overhead (r5 audit: GC
-    -25%, machine CPU -4% at 24 slots); the per-leaf parquet option
-    leaves every other column's dictionary on."""
-    w = (
-        clustered_for_write(routed, cfg)
+    write, compressed with SINK_CODEC.  Measured on 240k rows at 3 slots:
+    zstd with the token dictionary on writes 28 B/row against snappy's
+    88 B/row without it, with wall and CPU inside run-to-run noise."""
+    (
+        clustered_for_write(routed)
         .write
         .partitionBy(SINK_COL, "source", "severity_bucket")
         .mode(mode)
+        .option("compression", SINK_CODEC)
+        .parquet(out_dir)
     )
-    if not cfg.token_dictionary:
-        w = w.option("parquet.enable.dictionary#tokens.list.element",
-                     "false")
-    w.parquet(out_dir)
 
 
 def route_write_bucketed(routed: DataFrame, table: str,

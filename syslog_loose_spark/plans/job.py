@@ -8,8 +8,7 @@ cluster):
         syslog_loose_spark/plans/job.py \
         --input  <iceberg table or parquet path> \
         --output <sink root> \
-        --run-id R42 --chunks 16 --salt-buckets 32 \
-        --hot-sources nginx --tz-offset-seconds 0
+        --run-id R42 --chunks 16 --tz-offset-seconds 0
 
 The job is resumable: re-running with the same --run-id and --output
 skips chunks whose commit markers exist in <output>/state (see
@@ -28,10 +27,6 @@ def main(argv=None) -> None:
     ap.add_argument("--output", required=True, help="sink root directory")
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--chunks", type=int, default=16)
-    ap.add_argument("--salt-buckets", type=int, default=32)
-    ap.add_argument("--hot-sources", nargs="*", default=["nginx"],
-                    help="skewed source keys to salt; 'auto' = measure "
-                         "with route.detect_hot_sources at job start")
     ap.add_argument("--tz-offset-seconds", type=int, default=None)
     ap.add_argument("--tz-name", default=None,
                     help="IANA zone for DST-aware RFC3164 timestamps "
@@ -56,14 +51,10 @@ def main(argv=None) -> None:
              .getOrCreate())
     shuffle = args.shuffle_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions"))
-    hot = (None if args.hot_sources == ["auto"]
-           else tuple(args.hot_sources))
     cfg = PipelineConfig(
         parse=ParseConfig(variant=args.variant,
                           tz_offset_seconds=args.tz_offset_seconds,
                           tz_name=args.tz_name),
-        hot_sources=hot,
-        salt_buckets=args.salt_buckets,
         shuffle_partitions=shuffle,
     )
     tokens = read_tokenized(spark, args.input)

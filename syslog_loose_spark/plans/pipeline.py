@@ -1,9 +1,9 @@
 """End-to-end job assembly: parse → enrich → route → aggregate, resumable.
 
 Physical profile (SURVEY §3.2/§4.4): one JVM→Python Arrow boundary (the
-parse mapInPandas), one shuffle per chunk (the salted routing repartition),
-one shuffle for the final aggregate.  Everything else is narrow or a
-broadcast join.
+parse arrow_udf), one shuffle per chunk (the REBALANCE before the routed
+fan-out write), one shuffle for the final aggregate.  Everything else is
+narrow or a broadcast join.
 """
 
 from __future__ import annotations
@@ -67,38 +67,25 @@ def run_pipeline(spark: SparkSession, tokens_df: DataFrame, out_dir: str,
     ``fail_after_chunk`` is a test hook: raise after committing that many
     chunks, simulating a mid-run kill for the resume-idempotence tests.
     ``timings``, when a dict, receives per-phase (wall_sec,
-    machine_cpu_sec) accumulators: detect_hot / parse_route_write /
-    commit_metrics / aggregate.
+    machine_cpu_sec) accumulators: parse_route_write / commit_metrics /
+    aggregate.
     """
     state_dir = os.path.join(out_dir, "state")
     done = completed_chunks(spark, state_dir, run_id)
     todo = [c for c in range(n_chunks) if c not in done]
 
-    if (cfg.hot_sources is None and todo
-            and cfg.write_strategy != "rebalance"):
-        # auto-detect routing skew (column-pruned count pass) — only for
-        # the salted strategy (REBALANCE handles skew at runtime without
-        # a measurement pass) and only when there is work left, so a
-        # fully-resumed run stays scan-free
-        import dataclasses
-
-        from ..operators.route import detect_hot_sources
-
-        with _phase(timings, "detect_hot"):
-            cfg = dataclasses.replace(
-                cfg, hot_sources=detect_hot_sources(tokens_df))
-
     chunk_key = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_chunks))
     n_done = 0
     for c in todo:
-        # pre-parse pruning; with a single chunk the predicate is a
-        # tautology — skip the per-row xxhash64 filter entirely
+        # a row filter, not a scan prune: every chunk reads the whole
+        # input.  With a single chunk the predicate is a tautology, so
+        # the per-row xxhash64 filter is skipped entirely
         chunk_in = (tokens_df if n_chunks == 1
                     else tokens_df.where(chunk_key == c))
         routed = parsed_pipeline(chunk_in, cfg)
         chunk_dir = os.path.join(routed_dir(out_dir), f"chunk={c}")
         with _phase(timings, "parse_route_write"):
-            route_write(routed, chunk_dir, cfg, mode="overwrite")
+            route_write(routed, chunk_dir, mode="overwrite")
         # metrics from the files just written (validates the sink contents)
         with _phase(timings, "commit_metrics"):
             written = spark.read.parquet(chunk_dir)

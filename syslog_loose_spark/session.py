@@ -2,7 +2,9 @@
 
 Pinned UTC session timezone (timestamps are stored as UTC instants +
 explicit tz_offset_seconds), Arrow enabled for the single Python boundary,
-AQE on (coalesce + skew-join complement the explicit salting in route.py).
+AQE on (route.py's REBALANCE hint needs it to split and coalesce the
+fan-out write's partitions).  The parquet codec is left at the session
+default: route.py sets zstd on the routed sink write alone.
 """
 
 from __future__ import annotations

@@ -9,12 +9,12 @@ a deterministic, invertible tokenization, so token-array equality against
 the reference is byte equality of the raw line.
 
 The ``source`` assignment is deliberately skewed (~60% nginx) to exercise
-hot-source salting in the routing stage.
+the routing stage's skew handling (the REBALANCE before the fan-out write).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
 # (fixture_id, raw_line) — raw lines from the reference test suite
 # (tests/tests.rs / rfc3164.rs / timestamp.rs; see FIXTURES.md §3).
@@ -200,19 +200,6 @@ def source_for(i: int) -> str:
 def tokenize(line: str) -> List[int]:
     """UTF-8 bytes, one int per byte (invertible; see module docstring)."""
     return list(line.encode("utf-8"))
-
-
-def detokenize(tokens: List[int]) -> str:
-    return bytes(t & 0xFF for t in tokens).decode("utf-8", "replace")
-
-
-def generate_rows(n_rows: int) -> Iterator[Tuple[str, List[int], int, str]]:
-    """Cycle the corpus into n_rows of (doc_id, tokens, n_tok, source)."""
-    n = len(GOLDEN_CORPUS)
-    for i in range(n_rows):
-        _, line = GOLDEN_CORPUS[i % n]
-        toks = tokenize(line)
-        yield (f"doc-{i:08d}", toks, len(toks), source_for(i))
 
 
 def corpus_line(i: int) -> str:

@@ -40,23 +40,14 @@ def windowed_counts(parsed_stream: DataFrame,
     )
 
 
-def foreach_batch_writer(out_dir: str, cfg: PipelineConfig):
+def foreach_batch_writer(out_dir: str):
     """foreachBatch hook reusing the batch router: each micro-batch is
-    fanned out with the same salted partitioned write, under
+    fanned out with the same REBALANCE-clustered partitioned write, under
     epoch_id-scoped directories for exactly-once replay semantics."""
     from ..operators.route import route_write
 
-    if cfg.hot_sources is None:
-        # fail at construction, not at the first micro-batch: 'auto' skew
-        # detection never runs in streaming (there is no bounded input to
-        # measure) — the caller must pass a concrete tuple (or ())
-        raise ValueError(
-            "hot_sources='auto' (None) is a batch-only convenience; "
-            "resolve it (detect_hot_sources on a sample / historical "
-            "table) before building a streaming writer")
-
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        route_write(batch_df, f"{out_dir}/epoch={epoch_id}", cfg,
+        route_write(batch_df, f"{out_dir}/epoch={epoch_id}",
                     mode="overwrite")
 
     return write

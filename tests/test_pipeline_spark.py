@@ -178,62 +178,106 @@ def test_commit_chunk_marker_and_metrics_share_one_file(spark, tmp_path):
 
 
 def test_sink_write_plan_is_single_shuffle(spark):
-    """The routed plan must contain exactly one Exchange (the salted
+    """The routed plan must contain exactly one Exchange (the
     repartition) and one ArrowEvalPython-ish Python stage."""
     df = generate_tokenized(spark, 100)
     routed = parsed_pipeline(df, CFG).repartition(
         8, F.col("source"), F.col("severity_bucket"))
     plan = routed._jdf.queryExecution().executedPlan().toString()
-    # exactly one shuffle (the salted repartition); the dim joins must be
+    # exactly one shuffle (the repartition); the dim joins must be
     # broadcasts, not shuffles
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("BroadcastExchange") == 2, plan
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_detect_hot_sources_and_auto_salting(spark, tmp_path):
-    """hot_sources=None measures skew instead of configuring it: the
-    generated table is ~60% nginx, so detection finds exactly nginx, and
-    the auto-salted run produces identical sink aggregates."""
-    from syslog_loose_spark.operators.route import detect_hot_sources
-
-    toks = generate_tokenized(spark, 3000)
-    assert detect_hot_sources(toks) == ("nginx",)
-    assert detect_hot_sources(toks, fraction=0.001) == tuple(sorted(
-        r["source"] for r in toks.select("source").distinct().collect()))
-
-    # pin the salted strategy: the default REBALANCE path never
-    # resolves hot sources (AQE handles skew), so 'auto' detection only
-    # runs — and is only exercised — under salted_repartition
-    agg_auto = run_pipeline(
-        spark, toks, str(tmp_path / "auto"), run_id="a",
-        cfg=PipelineConfig(hot_sources=None,
-                           write_strategy="salted_repartition"),
-        n_chunks=1).collect()
-    agg_static = run_pipeline(
-        spark, toks, str(tmp_path / "static"), run_id="s",
-        cfg=PipelineConfig(write_strategy="salted_repartition"),
-        n_chunks=1).collect()
-    assert sorted(map(tuple, agg_auto), key=repr) == \
-        sorted(map(tuple, agg_static), key=repr)
-
-
 def test_route_write_strategies_agree_and_rebalance_plans(spark, tmp_path):
-    """The REBALANCE fan-out (default) and the salted repartition
-    fallback must write identical row sets, and the rebalance plan must
-    actually carry the AQE rebalance operator."""
+    """The fan-out's clustering carries the AQE rebalance operator, and
+    the write keeps exactly the routed (doc_id, sink) row set."""
     from syslog_loose_spark.operators.route import (
         clustered_for_write, route_write)
 
     toks = generate_tokenized(spark, 2000)
     routed = parsed_pipeline(toks, CFG)
-    reb = clustered_for_write(routed, PipelineConfig())
-    plan = reb._jdf.queryExecution().optimizedPlan().toString()
+    plan = clustered_for_write(routed)._jdf.queryExecution() \
+        .optimizedPlan().toString()
     assert "RebalancePartitions" in plan, plan
-    for name, cfg in (("reb", PipelineConfig()),
-                      ("salt", PipelineConfig(
-                          write_strategy="salted_repartition"))):
-        route_write(parsed_pipeline(toks, cfg), str(tmp_path / name), cfg)
+    route_write(routed, str(tmp_path / "reb"))
     a = spark.read.parquet(str(tmp_path / "reb")).select("doc_id", "sink")
-    b = spark.read.parquet(str(tmp_path / "salt")).select("doc_id", "sink")
+    b = routed.select("doc_id", "sink")
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def _parquet_files(root):
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(root)
+                  for f in fs if f.endswith(".parquet"))
+
+
+def test_routed_sink_format_zstd_token_dictionary(spark, tmp_path):
+    """The routed sinks are zstd with a dictionary-encoded token leaf and
+    keep list<int32> tokens; the codec is set on that write alone, so
+    the aggregates and state files keep the session codec."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "out")
+    run_pipeline(spark, generate_tokenized(spark, 300), out, run_id="f",
+                 cfg=CFG, n_chunks=1)
+    routed = _parquet_files(os.path.join(out, "routed"))
+    assert routed
+    pf = pq.ParquetFile(routed[0])
+    tokens_type = pf.schema_arrow.field("tokens").type
+    assert pa.types.is_list(tokens_type), tokens_type
+    assert tokens_type.value_type == pa.int32(), tokens_type
+    md = pf.metadata
+    chunks = [md.row_group(g).column(c) for g in range(md.num_row_groups)
+              for c in range(md.num_columns)]
+    assert {ch.compression for ch in chunks} == {"ZSTD"}
+    tok = [ch for ch in chunks if ch.path_in_schema == "tokens.list.element"]
+    assert tok and all(any("DICTIONARY" in e for e in ch.encodings)
+                       for ch in tok), [ch.encodings for ch in tok]
+
+    session_codec = spark.conf.get(
+        "spark.sql.parquet.compression.codec").upper()
+    assert session_codec != "ZSTD"
+    for sub in ("aggregates", "state"):
+        files = _parquet_files(os.path.join(out, sub))
+        assert files, sub
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            assert {md.row_group(g).column(c).compression
+                    for g in range(md.num_row_groups)
+                    for c in range(md.num_columns)} <= {session_codec}, f
+
+
+def test_out_of_domain_tokens_dead_letter(spark):
+    """Tokens are bytes: a row holding a token above 255, below 0 or null
+    is a fallback row routed to dead_letter, never a line whose token
+    silently wrapped to another byte (361 & 0xFF is 'i').  Its tokens
+    pass through unchanged."""
+    from pyspark.sql.types import (
+        ArrayType, IntegerType, StringType, StructField, StructType)
+
+    line = list(b"<34>1 2003-10-11T22:14:15.003Z mymachine su - ID47 - hi")
+    i = line.index(ord("i"))
+    rows = {"ok": line,
+            "wrap361": line[:i] + [361] + line[i + 1:],
+            "neg": line[:i] + [-1] + line[i + 1:],
+            "null": line[:i] + [None] + line[i + 1:]}
+    schema = StructType([
+        StructField("doc_id", StringType(), False),
+        StructField("tokens", ArrayType(IntegerType(), True), False),
+        StructField("n_tok", IntegerType(), False),
+        StructField("source", StringType(), False)])
+    df = spark.createDataFrame(
+        [(k, v, len(v), "nginx") for k, v in rows.items()], schema)
+    got = {r["doc_id"]: r for r in parsed_pipeline(df, CFG).collect()}
+    assert got["ok"]["parse_ok"] and got["ok"]["sink"] != "dead_letter"
+    for k in ("wrap361", "neg", "null"):
+        r = got[k]
+        assert not r["parse_ok"] and r["sink"] == "dead_letter", k
+        assert list(r["tokens"]) == rows[k], k
+        assert r["facility"] is None and r["hostname"] is None, k
+        assert r["msg"] == bytes(
+            0xFF if t is None or not 0 <= t <= 255 else t
+            for t in rows[k]).decode("utf-8", "replace"), k

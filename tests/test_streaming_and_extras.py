@@ -463,27 +463,6 @@ def test_persist_registry_bounded_across_cc_calls(spark):
     assert not D._PERSISTED
 
 
-def test_unresolved_auto_salting_fails_loudly(spark, tmp_path):
-    """ADVICE r2: hot_sources=None ('auto') reaching the router directly
-    (outside run_pipeline, e.g. a hand-built streaming writer) must raise,
-    not silently disable skew protection."""
-    import pytest as _pytest
-
-    from syslog_loose_spark.operators.route import _is_hot, salted_source
-    from syslog_loose_spark.streaming.stream import foreach_batch_writer
-
-    auto = PipelineConfig(hot_sources=None)
-    with _pytest.raises(ValueError, match="auto"):
-        _is_hot(auto)
-    with _pytest.raises(ValueError, match="auto"):
-        salted_source(auto)
-    with _pytest.raises(ValueError, match="auto"):
-        foreach_batch_writer(str(tmp_path), auto)
-    # () is the deliberate off switch and a concrete tuple still works
-    assert _is_hot(PipelineConfig(hot_sources=())) is not None
-    assert _is_hot(PipelineConfig(hot_sources=("nginx",))) is not None
-
-
 def test_ivf_topk_scales_to_hundreds_of_cells(spark):
     """r2 VERDICT: centroids must ship as a broadcast relation, not plan
     literals (O(n_cells x dim) in the plan tree).  n_cells=256 over the
